@@ -31,6 +31,7 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as _fh:
     BENCH = json.load(_fh)
 UNITS = {m["name"]: m["unit"] for m in BENCH["end_to_end"] + BENCH["per_layer"]}
 MAX_LOOP_S = 90.0  # hard stop for the measuring loop, whatever --seconds says
+ORACLE_TIMEOUT_S = 60.0  # the expected outputs take a few seconds
 DRIVER_MEM = "2g"  # JVM heap cap; with the 8g default, peak RSS follows GC timing
 _T0 = time.perf_counter()
 
@@ -164,13 +165,15 @@ def _env_info(spark, manifest: dict, pinned: dict) -> dict:
 
 def _warm_up(wl, oracle: subprocess.Popen) -> None:
     """Untimed warm-up: ``wl.warm_up_rounds`` rounds, and more while the
-    oracle subprocess computes the expected outputs."""
+    oracle subprocess computes the expected outputs (for at most
+    ``ORACLE_TIMEOUT_S``)."""
+    deadline = time.perf_counter() + ORACLE_TIMEOUT_S
     k = 0
-    while k < wl.warm_up_rounds or oracle.poll() is None:
+    while k < wl.warm_up_rounds or (oracle.poll() is None and time.perf_counter() < deadline):
         wl.warm_up(k)
         k += 1
     _phase(f"warm-up done after {k} rounds")
-    if oracle.wait() != 0:
+    if oracle.wait(timeout=max(0.0, deadline - time.perf_counter())) != 0:
         raise RuntimeError("computing the expected outputs failed")
 
 
