@@ -32,7 +32,13 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as _fh:
 UNITS = {m["name"]: m["unit"] for m in BENCH["end_to_end"] + BENCH["per_layer"]}
 MAX_LOOP_S = 90.0  # hard stop for the measuring loop, whatever --seconds says
 ORACLE_TIMEOUT_S = 60.0  # the expected outputs take a few seconds
-DRIVER_MEM = "2g"  # JVM heap cap; with the 8g default, peak RSS follows GC timing
+# The driver heap: capped through the program's own SPARK_GRAFT_DRIVER_MEM
+# (8g by default) and fixed in size with -Xms. A heap the JVM grows by GC
+# ergonomics makes peak RSS follow GC timing (2.8-6.4 GB between runs under
+# the 8g default; 1.5-2.1 GB under a 2g cap without -Xms). With the heap's
+# share constant, peak_rss_mb follows the memory the program uses outside
+# the Java heap: JVM off-heap, the Python driver and Python workers.
+DRIVER_MEM = "2g"
 _T0 = time.perf_counter()
 
 
@@ -94,11 +100,13 @@ def _log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
-def _measure(wl, seconds: float, min_ops: int, tracer=None) -> tuple[list, float]:
-    """Closed loop: run operations back to back until ``seconds`` have
-    passed and at least ``min_ops`` ran. With a ``tracer``, each operation
-    runs twice in a row, once traced, the traced run first in every other
-    pair. Returns ([(latency, out, traced)], wall)."""
+def _measure(wl, seconds: float, min_cycles: int, tracer=None) -> tuple[list, float]:
+    """Closed loop: run operations back to back, in whole cycles of
+    ``wl.cycle`` operations, until ``seconds`` have passed and at least
+    ``min_cycles`` cycles ran. With a ``tracer``, each operation runs twice
+    in a row, once traced, the traced run first in every other pair.
+    Returns ([(latency, out, traced)], wall)."""
+    per_cycle = wl.cycle * (1 if tracer is None else 2)
     done = []
     start = time.perf_counter()
     while True:
@@ -114,8 +122,8 @@ def _measure(wl, seconds: float, min_ops: int, tracer=None) -> tuple[list, float
             out = None
         b = time.perf_counter()
         done.append((b - a, out, traced))
-        pair_done = tracer is None or n % 2 == 1
-        if pair_done and (b - start >= MAX_LOOP_S or (b - start >= seconds and len(done) >= min_ops)):
+        cycle_done = len(done) % per_cycle == 0
+        if cycle_done and (b - start >= MAX_LOOP_S or (b - start >= seconds and len(done) >= min_cycles * per_cycle)):
             if tracer is not None:
                 tracer.enabled = False
             return done, b - start
@@ -172,7 +180,7 @@ def _warm_up(wl, oracle: subprocess.Popen) -> None:
     while k < wl.warm_up_rounds or (oracle.poll() is None and time.perf_counter() < deadline):
         wl.warm_up(k)
         k += 1
-    _phase(f"warm-up done after {k} rounds")
+        _phase(f"warm-up round {k} done")
     if oracle.wait(timeout=max(0.0, deadline - time.perf_counter())) != 0:
         raise RuntimeError("computing the expected outputs failed")
 
@@ -257,9 +265,9 @@ def _run(args, cls, manifest: dict, pinned: dict, oracle_cmd: list, run_dir: str
             # same warm session; the difference is the tracing overhead.
             n_spans = len(tracer.spans)
             if trace:
-                done, wall = _measure(wl, args.seconds, max(4, wl.min_ops), tracer)
+                done, wall = _measure(wl, args.seconds, wl.trace_cycles, tracer)
             else:
-                done, wall = _measure(wl, args.seconds, wl.min_ops)
+                done, wall = _measure(wl, args.seconds, wl.min_cycles)
             op_roots = {s.id for s in tracer.spans[n_spans:] if s.parent is None}
             rss.recording = False
             _phase("verify")
@@ -288,9 +296,10 @@ def _end_to_end(wl, done: list, wall: float, setup_s: float, peak_rss: int) -> d
     print(f"note query_tail_ms is p{pct:.1f} of {len(lat)} operations", flush=True)
     busy = sum(t for t, _ in ok)
     rate = lambda amount: sum(amount(o) for _, o in ok) / busy if ok else 0.0  # noqa: E731
+    cycles = [sum(lat[i:i + wl.cycle]) for i in range(0, len(lat), wl.cycle)]
     return {
         "setup_s": setup_s,
-        "job_s": statistics.median(lat),
+        "job_s": statistics.median(cycles),
         "records_per_s": rate(wl.records),
         "input_mb_per_s": rate(wl.input_bytes) / 1e6,
         "query_p50_ms": 1e3 * statistics.median(lat),

@@ -105,18 +105,24 @@ class Tracer:
 
 
 @contextlib.contextmanager
-def wrapped(tracer: Tracer, targets: list[tuple[object, str]], span_name: str,
+def wrapped(tracer: Tracer, targets: list[tuple[object, str]], span_name,
             on_call=None):
-    """Temporarily replace ``module.attr`` for each (module, attr) target with
-    a wrapper that records a span (and calls ``on_call(args)``)."""
+    """Temporarily replace ``obj.attr`` for each (module or class, attr)
+    target with a wrapper that records a span (and calls ``on_call(args)``).
+    ``span_name`` is a string, or a function of the call count (0 for the
+    first call) that names each call's span."""
     saved = [(mod, attr, getattr(mod, attr)) for mod, attr in targets]
     original = saved[0][2]
+    calls = 0
 
     @functools.wraps(original)
     def wrapper(*args, **kwargs):
+        nonlocal calls
         if on_call is not None:
             on_call(args)
-        with tracer.span(span_name):
+        name = span_name if isinstance(span_name, str) else span_name(calls)
+        calls += 1
+        with tracer.span(name):
             return original(*args, **kwargs)
 
     for mod, attr, _ in saved:

@@ -11,6 +11,7 @@ functions of ``dic_a1_spark``:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import random
 import statistics
@@ -29,6 +30,8 @@ QUERY_MIX = (
     "events_asof_click_before_purchase", "sql_top_returned_customers",
     "text_token_stats", "dedup_minhash_groups",
 )
+# run_pipeline's three driver actions, in the order it calls them.
+REVIEWS_COLLECTS = ("reviews.topk_collect", "reviews.vocab_collect", "reviews.counters_collect")
 # Queries whose result has a low-cardinality, never-NULL string column to
 # partition a written result by.
 WRITE_PARTITION = {
@@ -57,7 +60,9 @@ def timed_prefix(tracer: tracing.Tracer, name: str, action, repeat: int = 2) -> 
 
 class Workload:
     name = ""
-    min_ops = 1  # measured operations per run, at least
+    cycle = 1  # operations in one pass over the workload's mix
+    min_cycles = 1  # measured cycles per run, at least
+    trace_cycles = 1  # the same for a traced run, in pairs of operations
     warm_up_rounds = 1  # untimed rounds, at least
 
     def __init__(self, spark, tracer: tracing.Tracer, manifest: dict, out_dir: str,
@@ -76,7 +81,8 @@ class ReviewsChisq(Workload):
 
     name = "reviews_chisq"
     warm_up_rounds = 2
-    min_ops = 2
+    min_cycles = 2
+    trace_cycles = 2
 
     def warm_up(self, k: int) -> None:
         """Round 0 runs the job on a 5 % prefix of the input (a cold run pays
@@ -90,42 +96,24 @@ class ReviewsChisq(Workload):
                              os.path.join(self.out_dir, "warm-up"), m["stopwords_path"])
 
     def op(self, i: int, traced: bool):
+        from pyspark.sql.classic.dataframe import DataFrame
+
         from dic_a1_spark.operators import reviews
 
         out_dir = os.path.join(self.out_dir, f"reviews-{i % 2}")
-        m = self.manifest
-        if not traced:
+        m, t = self.manifest, self.tracer
+        with contextlib.ExitStack() as stack:
+            if traced:
+                # The driver actions of run_pipeline, named in call order.
+                stack.enter_context(tracing.wrapped(
+                    t, [(DataFrame, "collect")],
+                    lambda k: REVIEWS_COLLECTS[k] if k < len(REVIEWS_COLLECTS) else f"reviews.collect_{k}"))
+                stack.enter_context(tracing.wrapped(
+                    t, [(reviews, "reviews_chisq")], "reviews.reviews_chisq"))
+                stack.enter_context(t.span("reviews.run_pipeline"))
             lines = reviews.run_pipeline(self.spark, m["reviews_path"], out_dir, m["stopwords_path"])
-        else:
-            lines = self._pipeline_traced(out_dir)
         with open(os.path.join(out_dir, "counters.txt"), encoding="utf-8") as fh:
             return lines, fh.read()
-
-    def _pipeline_traced(self, out_dir: str) -> list[str]:
-        """``run_pipeline`` through the same public calls, one span each."""
-        from dic_a1_spark.operators import chisq, reviews
-        from dic_a1_spark.sources import sinks
-
-        m, t = self.manifest, self.tracer
-        with t.span("reviews.run_pipeline"):
-            with t.span("reviews.reviews_chisq"):
-                topk, vocab, counters = reviews.reviews_chisq(
-                    self.spark, m["reviews_path"], m["stopwords_path"])
-            with t.span("reviews.topk_collect"):
-                topk_rows = topk.collect()
-            with t.span("reviews.vocab_collect"):
-                vocab_words = [r["word"] for r in vocab.collect()]
-            lines = chisq.format_golden_lines(topk_rows, vocab_words)
-            os.makedirs(out_dir, exist_ok=True)
-            with open(os.path.join(out_dir, "chisq_output.txt"), "w") as fh:
-                fh.write("\n".join(lines) + "\n")
-            with t.span("reviews.counters_collect"):
-                crows = counters.collect()
-            total = crows[0]["n_total"] if crows else 0
-            with open(os.path.join(out_dir, "counters.txt"), "w") as fh:
-                fh.write(sinks.format_counters_line(
-                    total, {r["category"]: r["cat_n"] for r in crows}) + "\n")
-        return lines
 
     def verify(self, out) -> str | None:
         return expected.check_reviews(out[0], out[1].strip(), self.exp)
@@ -181,7 +169,8 @@ class QueryMix(Workload):
     one of the queries, and the traced run decomposes it by layer."""
 
     name = "query_mix"
-    warm_up_rounds = 2
+    warm_up_rounds = 1
+    min_cycles = 3  # 54 requests: the tail (ten samples beyond it) is p81.5
 
     def __init__(self, *args, **kwargs):
         super().__init__(*args, **kwargs)
@@ -190,7 +179,7 @@ class QueryMix(Workload):
         # the same mix whatever the seed.
         rng = random.Random(self.seed)
         cycle = [(n, False) for n in QUERY_MIX] + [(n, True) for n in sorted(WRITE_PARTITION)]
-        self.min_ops = len(cycle)
+        self.cycle = len(cycle)
         self.sequence = []
         for _ in range(1000):
             rng.shuffle(cycle)
