@@ -15,8 +15,6 @@ src/wordCountJob.py:75 builds a ``set``).
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -56,31 +54,22 @@ def tokens_distinct(col: Column) -> Column:
     return F.array_distinct(tokenize(col))
 
 
-def explode_tokens(
-    df: DataFrame,
-    text_col: str = "text",
-    word_col: str = "word",
-    distinct_per_doc: bool = True,
-) -> DataFrame:
-    """documents-with-text -> one row per (doc, token), empties dropped."""
-    arr = tokens_distinct(F.col(text_col)) if distinct_per_doc else tokenize(F.col(text_col))
+def explode_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """documents-with-text -> one row per (doc, distinct token) in column
+    ``word``, empties dropped."""
     return (
-        df.withColumn(word_col, F.explode(arr))
-        .where(F.col(word_col) != "")
+        df.withColumn("word", F.explode(tokens_distinct(F.col(text_col))))
+        .where(F.col("word") != "")
         .drop(text_col)
     )
 
 
-def remove_stopwords(
-    df: DataFrame,
-    word_col: str = "word",
-    stopwords: Iterable[str] = STOPWORDS,
-) -> DataFrame:
-    """Stopword filter (reference src/wordCountJob.py:77). For a constant
-    list this is a codegen'd ``NOT IN``; for a file-backed list prefer a
-    broadcast ``left_anti`` join (see operators.chisq.remove_stopwords_df).
-    """
-    return df.where(~F.col(word_col).isin(list(stopwords)))
+def remove_stopwords(df: DataFrame) -> DataFrame:
+    """Stopword filter on ``word`` (reference src/wordCountJob.py:77). For
+    the constant built-in list this is a codegen'd ``NOT IN``; a file-backed
+    list goes through a broadcast ``left_anti`` join instead (see
+    operators.chisq.remove_stopwords_df)."""
+    return df.where(~F.col("word").isin(list(STOPWORDS)))
 
 
 def chi2_expr(a: Column, b: Column, c: Column, d: Column, n: Column) -> Column:

@@ -10,6 +10,12 @@ ONE lazy DataFrame DAG:
   reference stage 2 (src/chiSquaredJob.py): chi2 per (word, category) ->
       top-75 per category -> union vocabulary -> formatted lines
 
+This module holds the only Column-double chi-square: ``score_counts``
+(doc frequencies + category totals -> chi2) and ``rank_topk`` (top-k per
+category). operators.reviews feeds them its file-backed-stopword doc
+frequency; operators.goldens ranks its exact-integer scores with
+``rank_topk`` and takes its per-word totals from ``with_word_totals``.
+
 Physical shape (what Catalyst produces, verified via .explain):
   - one shuffle for groupBy(word, category)  [partial agg map-side first]
   - one shuffle for the per-word window sum  [repartition on word]
@@ -44,12 +50,7 @@ from dic_a1_spark.functions.text import (
 from dic_a1_spark.sources.readers import load_table
 
 
-def doc_frequency(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    category_col: str = "category",
-    text_col: str = "text",
-) -> DataFrame:
+def doc_frequency(docs: DataFrame) -> DataFrame:
     """(word, category, n) where n = number of documents in the category
     containing the word (document frequency — reference stage-1 semantics,
     src/wordCountJob.py:75-99). Tokens are deduped per document BEFORE the
@@ -57,57 +58,40 @@ def doc_frequency(
     the minimum rows. Spark's hash aggregate does partial (map-side) then
     final aggregation automatically — the reference's hand-written combiner
     (src/wordCountJob.py:81-89) is free here."""
-    tok = explode_tokens(
-        docs.select(id_col, category_col, text_col), text_col=text_col
-    )
-    tok = remove_stopwords(tok)
-    return tok.groupBy("word", category_col).agg(F.count("*").alias("n"))
+    tok = remove_stopwords(explode_tokens(docs.select("category", "text")))
+    return tok.groupBy("word", "category").agg(F.count("*").alias("n"))
 
 
-def category_totals(docs: DataFrame, category_col: str = "category") -> DataFrame:
+def category_totals(docs: DataFrame) -> DataFrame:
     """(category, cat_n) — the reference's per-category Hadoop counters
     (src/wordCountJob.py:68) as an exact, retry-safe aggregate."""
-    return docs.groupBy(category_col).agg(F.count("*").alias("cat_n"))
+    return docs.groupBy("category").agg(F.count("*").alias("cat_n"))
 
 
-def chi2_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    category_col: str = "category",
-    text_col: str = "text",
-) -> DataFrame:
-    """(category, word, chi2) for every non-degenerate (word, category).
+def with_word_totals(wc: DataFrame) -> DataFrame:
+    """Adds ``word_n``: the word's doc frequency summed over all categories
+    — a window sum over the already (word, category)-aggregated frame."""
+    return wc.withColumn("word_n", F.sum("n").over(Window.partitionBy("word")))
+
+
+def score_counts(wc: DataFrame, cat: DataFrame) -> DataFrame:
+    """(category, word, chi2) from (word, category, n) doc frequencies and
+    (category, cat_n) totals, for every non-degenerate (word, category).
 
     Contingency cells (reference src/chiSquaredJob.py:84-93):
       A = docs in category with word            = n
       B = docs in other categories with word    = word_n - n
       C = docs in category without word         = cat_n - n
       D = everything else                       = N - A - B - C
-    The per-word total (B's ingredient) is a window sum over the already
-    (word, category)-aggregated frame; category totals and the global count
-    join back via broadcast — the Spark-native form of the reference's
-    counters.txt distributed-cache map-side join (src/chiSquaredJob.py:37-57).
+    Category totals and the global count join back via broadcast — the
+    Spark-native form of the reference's counters.txt distributed-cache
+    map-side join (src/chiSquaredJob.py:37-57). The global total is the sum
+    of the category totals (22-ish rows), not another scan of the corpus.
     """
-    # NULL-category docs are excluded from the ENTIRE contingency
-    # universe (the engine-side analogue of the reference's
-    # malformed-record skip, src/chiSquaredJob.py field-missing guard):
-    # keeping them would leak their word counts into the per-word window
-    # (computed BELOW the category join) while the category join drops
-    # their rows — the inconsistent-cells fork the r9 NULL-corpus sweep
-    # caught. The oracle applies the same lang IS NOT NULL filter.
-    docs = docs.where(F.col(category_col).isNotNull())
-    wc = doc_frequency(docs, id_col, category_col, text_col)
-    cat = category_totals(docs, category_col)
-    # Derive the global total from the category totals (sum of 22-ish rows)
-    # instead of a third scan of docs — at 100 TB that's one fewer pass
-    # over the corpus; the remaining two scans are column-pruned to
-    # (text, category) and (category) respectively.
     total = cat.agg(F.sum("cat_n").alias("n_total"))
-
-    word_win = Window.partitionBy("word")
     scored = (
-        wc.withColumn("word_n", F.sum("n").over(word_win))
-        .join(F.broadcast(cat), category_col)
+        with_word_totals(wc)
+        .join(F.broadcast(cat), "category")
         .crossJoin(F.broadcast(total))
     )
     a = F.col("n").cast("double")
@@ -117,35 +101,40 @@ def chi2_scores(
         F.col("n_total") - F.col("word_n") - F.col("cat_n") + F.col("n")
     ).cast("double")
     n = F.col("n_total").cast("double")
-    return (
-        scored.where(zero_margin_filter(a, b, c, d))
-        .select(
-            F.col(category_col).alias("category"),
-            "word",
-            chi2_expr(a, b, c, d, n).alias("chi2"),
-        )
+    return scored.where(zero_margin_filter(a, b, c, d)).select(
+        "category", "word", chi2_expr(a, b, c, d, n).alias("chi2")
     )
 
 
-def chi2_topk(
-    docs: DataFrame,
-    k: int = CHI2_TOP_K,
-    id_col: str = "doc_id",
-    category_col: str = "category",
-    text_col: str = "text",
-) -> DataFrame:
+def rank_topk(scores: DataFrame, k: int = CHI2_TOP_K) -> DataFrame:
+    """(category, word, chi2, rank): top-k words per category, chi2
+    descending. The reference relies on Python's stable sort for ties
+    (src/chiSquaredJob.py:105); here the tiebreak is explicit (word
+    ascending) so results are deterministic on any cluster."""
+    rank_win = Window.partitionBy("category").orderBy(F.desc("chi2"), F.asc("word"))
+    return scores.withColumn("rank", F.row_number().over(rank_win)).where(
+        F.col("rank") <= k
+    )
+
+
+def chi2_scores(docs: DataFrame) -> DataFrame:
+    """(category, word, chi2) over (category, text) documents with the
+    built-in stopword list."""
+    # NULL-category docs are excluded from the ENTIRE contingency
+    # universe (the engine-side analogue of the reference's
+    # malformed-record skip, src/chiSquaredJob.py field-missing guard):
+    # keeping them would leak their word counts into the per-word window
+    # (computed BELOW the category join) while the category join drops
+    # their rows — the inconsistent-cells fork the r9 NULL-corpus sweep
+    # caught. The oracle applies the same lang IS NOT NULL filter.
+    docs = docs.where(F.col("category").isNotNull())
+    return score_counts(doc_frequency(docs), category_totals(docs))
+
+
+def chi2_topk(docs: DataFrame, k: int = CHI2_TOP_K) -> DataFrame:
     """(category, word, chi2, rank): top-k discriminative words per
-    category, chi2 descending. The reference relies on Python's stable sort
-    for ties (src/chiSquaredJob.py:105); here the tiebreak is explicit
-    (word ascending) so results are deterministic on any cluster."""
-    rank_win = Window.partitionBy("category").orderBy(
-        F.desc("chi2"), F.asc("word")
-    )
-    return (
-        chi2_scores(docs, id_col, category_col, text_col)
-        .withColumn("rank", F.row_number().over(rank_win))
-        .where(F.col("rank") <= k)
-    )
+    category."""
+    return rank_topk(chi2_scores(docs), k)
 
 
 def vocab_union(topk: DataFrame) -> DataFrame:
@@ -154,15 +143,13 @@ def vocab_union(topk: DataFrame) -> DataFrame:
     return topk.select("word").distinct().orderBy("word")
 
 
-def remove_stopwords_df(
-    tokens: DataFrame, stopwords: DataFrame, word_col: str = "word"
-) -> DataFrame:
-    """File-backed stopword removal as a broadcast LEFT ANTI join — the
-    idiomatic Spark form of the reference's distributed-cache set lookup
-    (src/wordCountJob.py:41-48,77). The stopword side is tiny; broadcast
-    keeps the probe map-side, no shuffle."""
-    sw = F.broadcast(stopwords.withColumnRenamed(stopwords.columns[0], word_col))
-    return tokens.join(sw, word_col, "left_anti")
+def remove_stopwords_df(tokens: DataFrame, stopwords: DataFrame) -> DataFrame:
+    """File-backed stopword removal on ``word`` as a broadcast LEFT ANTI
+    join — the idiomatic Spark form of the reference's distributed-cache set
+    lookup (src/wordCountJob.py:41-48,77). The stopword side is tiny;
+    broadcast keeps the probe map-side, no shuffle."""
+    sw = F.broadcast(stopwords.withColumnRenamed(stopwords.columns[0], "word"))
+    return tokens.join(sw, "word", "left_anti")
 
 
 def format_golden_lines(topk_rows, vocab_words) -> list[str]:

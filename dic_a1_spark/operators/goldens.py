@@ -28,7 +28,7 @@ holds the full-cluster run's counters). This module closes that gap:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from dic_a1_spark.config import CHI2_TOP_K
+from dic_a1_spark.operators.chisq import rank_topk, with_word_totals
 
 #: Devset total review count, recovered as described in the module docstring.
 DEVSET_TOTAL = 78829
@@ -113,7 +114,7 @@ def chi2_exact(
     Arrow-batched pandas UDF over Python ints — arbitrary precision, one
     correctly-rounded float division at the end, exactly like reference
     src/chiSquaredJob.py:84-93. Used for golden parity; the analytic fast
-    path (operators.chisq.chi2_scores) stays in pure Column doubles.
+    path (operators.chisq.score_counts) stays in pure Column doubles.
     """
     spark = hist.sparkSession
     cat_df = F.broadcast(
@@ -140,9 +141,8 @@ def chi2_exact(
             )
         return pd.Series(out, dtype="float64")
 
-    word_win = Window.partitionBy("word")
     return (
-        hist.withColumn("word_n", F.sum("n").over(word_win))
+        with_word_totals(hist)
         .join(cat_df, "category")
         .withColumn("n_total", F.lit(int(total)))
         .select(
@@ -161,14 +161,8 @@ def golden_topk(
     k: int = CHI2_TOP_K,
 ) -> DataFrame:
     """(category, word, chi2, rank): top-k per category under exact math,
-    deterministic tiebreak (word asc) — reference src/chiSquaredJob.py:105
-    relies on Python's stable sort instead."""
-    rank_win = Window.partitionBy("category").orderBy(F.desc("chi2"), F.asc("word"))
-    return (
-        chi2_exact(hist, total, cat_counts)
-        .withColumn("rank", F.row_number().over(rank_win))
-        .where(F.col("rank") <= k)
-    )
+    ranked by operators.chisq.rank_topk (deterministic word-asc tiebreak)."""
+    return rank_topk(chi2_exact(hist, total, cat_counts), k)
 
 
 # --- driver surface (r10, VERDICT item 6) ---------------------------------

@@ -1,34 +1,36 @@
 """End-to-end Amazon-reviews chi-square pipeline — the reference's actual
 workload (reviews JSON in, 23-line golden text out), Spark-native.
 
-This is the production shape of what operators/chisq.py exposes over the
-driver's `documents` table: same math, but fed from line-delimited reviews
-JSON with the reference's exact tolerance and default semantics, a
-file-backed stopword list (broadcast anti-join), the counters side-channel
-as an in-DAG aggregate, and the reference's raw-text output format.
+Built from operators/chisq.py's scoring and rank steps, fed from
+line-delimited reviews JSON with the reference's exact tolerance and
+default semantics, a file-backed stopword list (broadcast anti-join), the
+counters side-channel as an in-DAG aggregate, and the reference's raw-text
+output format.
 
 Reference trace (SURVEY.md §3): the whole two-job mrjob flow
 (wordCountJob.py + wordCountWrapper.py + chiSquaredJob.py + main.sh
 plumbing) collapses into ONE lazy DAG plus two driver-side collects of
-dimension-sized aggregates (counters: |categories| rows; output: |categories|
-+ 1 lines).
+dimension-sized aggregates (top-k: at most k rows per category, from which
+the vocabulary line is also rendered; counters: |categories| rows).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dic_a1_spark.config import CHI2_TOP_K
-from dic_a1_spark.functions.text import (
-    chi2_expr,
-    explode_tokens,
-    remove_stopwords,
-    zero_margin_filter,
+from dic_a1_spark.functions.text import explode_tokens, remove_stopwords
+from dic_a1_spark.operators.chisq import (
+    category_totals,
+    format_golden_lines,
+    rank_topk,
+    remove_stopwords_df,
+    score_counts,
+    vocab_union,
 )
-from dic_a1_spark.operators.chisq import format_golden_lines, remove_stopwords_df
 from dic_a1_spark.sources.readers import read_reviews_json, read_stopwords
 from dic_a1_spark.sources.sinks import format_counters_line
 
@@ -52,10 +54,12 @@ def reviews_chisq(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Returns (topk, vocab, counters) DataFrames for the reviews corpus.
 
-    Counters (total + per-category review counts) are exact in-DAG
-    aggregates — the Spark replacement for the reference's Hadoop counter
-    side channel (src/wordCountWrapper.py:32-50), which is retry-safe where
-    Spark accumulators would not be."""
+    The doc frequency differs from operators.chisq.doc_frequency only in
+    its stopword source (the file, when given); scoring and ranking are
+    operators.chisq's. Counters (total + per-category review counts) are
+    exact in-DAG aggregates — the Spark replacement for the reference's
+    Hadoop counter side channel (src/wordCountWrapper.py:32-50), which is
+    retry-safe where Spark accumulators would not be."""
     docs = reviews_to_docs(spark, reviews_path)
 
     tok = explode_tokens(docs, text_col="text")
@@ -63,37 +67,13 @@ def reviews_chisq(
         tok = remove_stopwords_df(tok, read_stopwords(spark, stopwords_path))
     else:
         tok = remove_stopwords(tok)
-
     wc = tok.groupBy("word", "category").agg(F.count("*").alias("n"))
-    cat = docs.groupBy("category").agg(F.count("*").alias("cat_n"))
-    # Global total derived from category totals — one fewer corpus scan
-    # (see operators.chisq.chi2_scores).
-    total = cat.agg(F.sum("cat_n").alias("n_total"))
 
-    word_win = Window.partitionBy("word")
-    scored = (
-        wc.withColumn("word_n", F.sum("n").over(word_win))
-        .join(F.broadcast(cat), "category")
-        .crossJoin(F.broadcast(total))
-    )
-    a = F.col("n").cast("double")
-    b = (F.col("word_n") - F.col("n")).cast("double")
-    c = (F.col("cat_n") - F.col("n")).cast("double")
-    d = (F.col("n_total") - F.col("word_n") - F.col("cat_n") + F.col("n")).cast(
-        "double"
-    )
-    n = F.col("n_total").cast("double")
-    chi = scored.where(zero_margin_filter(a, b, c, d)).select(
-        "category", "word", chi2_expr(a, b, c, d, n).alias("chi2")
-    )
-    rank_win = Window.partitionBy("category").orderBy(F.desc("chi2"), F.asc("word"))
-    topk = chi.withColumn("rank", F.row_number().over(rank_win)).where(
-        F.col("rank") <= k
-    )
-    vocab = topk.select("word").distinct().orderBy("word")
-    return topk, vocab, cat.join(F.broadcast(total)).select(
-        "category", "cat_n", "n_total"
-    )
+    cat = category_totals(docs)
+    topk = rank_topk(score_counts(wc, cat), k)
+    total = cat.agg(F.sum("cat_n").alias("n_total"))
+    counters = cat.crossJoin(F.broadcast(total))
+    return topk, vocab_union(topk), counters
 
 
 def run_pipeline(
@@ -107,18 +87,17 @@ def run_pipeline(
     return the output lines. Mirrors main.sh's artifact layout: a result
     text file (22 category lines + union vocabulary line, reference
     src/chiSquaredJob.py:110-127) and the counters side file
-    (src/wordCountWrapper.py:49-50)."""
-    topk, vocab, counters = reviews_chisq(spark, reviews_path, stopwords_path, k)
-
+    (src/wordCountWrapper.py:49-50). Two Spark actions: the vocabulary
+    line is rendered from the collected top-k rows, not computed again."""
+    topk, _, counters = reviews_chisq(spark, reviews_path, stopwords_path, k)
     topk_rows = topk.collect()
-    vocab_words = [r["word"] for r in vocab.collect()]
-    lines = format_golden_lines(topk_rows, vocab_words)
+    crows = counters.collect()
 
+    lines = format_golden_lines(topk_rows, (r["word"] for r in topk_rows))
     os.makedirs(output_dir, exist_ok=True)
     with open(os.path.join(output_dir, "chisq_output.txt"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
 
-    crows = counters.collect()
     total = crows[0]["n_total"] if crows else 0
     per_cat = {r["category"]: r["cat_n"] for r in crows}
     with open(os.path.join(output_dir, "counters.txt"), "w") as fh:

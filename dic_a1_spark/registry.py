@@ -13,92 +13,23 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Module order is deliberate: the round driver grades the first ~50 registry
-# entries in registration order (confirmed across CORRECTNESS_r01-r04).
-# Rounds rotate this order so driver coverage sweeps the whole registry.
-# An entry may be a module name (load all of its queries not yet loaded)
-# or a (module, (names...)) pair (load exactly those queries now; the
-# module's later bare entry picks up the rest) — this gives the rotation
-# per-QUERY window control instead of per-module granularity.
-#
-# ROUND-11 ROTATION. Entering this round: 242/242 entries driver-
-# observed, every oracle-gated entry hash-green on its newest grade;
-# the last rows-only entry (ml_kmeans_clusters) is retired this round —
-# it is now a deterministic Lloyd's iteration with exact-integer
-# centroid state, fully DuckDB-restatable (ml_ops.py ledger). The r10
-# window closed exactly at text_token_freq_items (sketches), as staged.
-# The window fronts:
-#   (h) EDITED in r11 — ml_ops: the hash-gated Lloyd's kmeans (NEW
-#       oracle) and the minhash certification's deterministic doc slice
-#       (doc_id % 10 < 3 on both engines, buying back 19% of sweep
-#       wall-time) (cum 2);
-#   (h2) NEW in r11 — multimodal_header_meta: real PNG IHDR / WAV fmt
-#       byte-offset parsing (hex/conv, map-only JVM expressions) over
-#       synthesized spec-conformant containers, plus the module's three
-#       r4-stale siblings (cum 6);
-#   (f) the r4 tranche from the r10 edge's successor: ngrams, lexical,
-#       udxf, dedup rest, tpch_full, lsh (cum 37);
-#   (i) the r5 tranche: scrub, incremental rest, quantize, evalops —
-#       the ~50 window edge lands inside evalops (cum 52); then
-#       curation, events rest.
-# Tail: r6/r7/r8-r9 tranches oldest-green-first, with the modules fully
-# re-graded in r10 (textstats, sketches, bpe, tokapply, ragpack,
-# goldens, similarity/pq/quantize fast twins via their host modules)
-# at the very end.
-#
-# R12 STAGING: front anything edited in r12, then wherever the r11
-# window edge landed inside evalops (check CORRECTNESS_r11's last key),
-# then curation + events rest, then r6 (substr, linededup, semdedup,
-# sampling, mixing, mining, winnow, corpusops), then r7 (dsir, lm, cdc,
-# colloc, vocabgrowth, panel, graphrank, taxonomy, seasonality, qlinear,
-# provenance, diversity, bm25, chisq), then r8/r9 (sql_surface,
-# tpch_extra, relational, postings, attribution, similarity, pq,
-# embdecontam, repselect, postcompress), then the r10/r11-fresh tail.
-#
-# r11-LATE ORACLE EDITS (no re-fronting needed — all VERIFIED value-
-# neutral on the driver corpora): the unicode hostile sweep routed every
-# tokenizer oracle through config.duckdb_lower_sql (Java-casefold mirror
-# — İ / final-sigma; driver testdata has zero such codepoints, checked
-# at all three SFs) and fixed the BPE pre-tokenizer oracle's RE2 \s
-# class (no \x0B in RE2; driver testdata has zero VT chars). Affected
-# modules: config-helper consumers, chisq, curation, ngrams. The r12
-# window will re-grade curation + chisq per the schedule above anyway.
-# The time-extremes corpus additionally fixed attribution (epoch-micros
-# enc now biased +10^18 so pre-1970 rows order lexicographically; the
-# bias cancels in every emitted value — driver results identical) and
-# events_approx_stats (the median error band is now the DISCRETE rank
-# corridor; all booleans stay TRUE on driver data). r12 should front
-# attribution + the events approx entry for a fresh grade anyway.
+# Every operator module, loaded in this order. Import errors propagate:
+# swallowing one would silently drop that module's queries from the registry.
 _MODULES = (
-    # (h) EDITED in r11 — deterministic Lloyd's kmeans (first driver
-    # grade of the new oracle) + the sampled minhash certification
     "dic_a1_spark.operators.ml_ops",
-    # (h2) NEW in r11 — real container-header parsing; siblings r4-stale
     "dic_a1_spark.operators.multimodal",
-    # (h3) EDITED r11-late by the time-extremes corpus: the biased
-    # attribution encoding and the rank-discrete approx error band —
-    # semantics changed, so these three grade fresh THIS round (their
-    # modules' bare entries below pick up the rest on schedule).
-    (
-        "dic_a1_spark.operators.attribution",
-        ("events_attribution", "events_attribution_rollup"),
-    ),
-    ("dic_a1_spark.operators.events", ("events_approx_stats",)),
-    # (f) r4 tranche, resuming after the r10 edge (text_token_freq_items)
     "dic_a1_spark.operators.ngrams",
     "dic_a1_spark.operators.lexical",
     "dic_a1_spark.operators.udxf",
     "dic_a1_spark.operators.dedup",
     "dic_a1_spark.operators.tpch_full",
     "dic_a1_spark.operators.lsh",
-    # (i) r5 tranche — the ~50 window edge lands inside evalops
     "dic_a1_spark.operators.scrub",
     "dic_a1_spark.operators.incremental",
     "dic_a1_spark.operators.quantize",
     "dic_a1_spark.operators.evalops",
     "dic_a1_spark.operators.curation",
     "dic_a1_spark.operators.events",
-    # --- tail: r6-r9 tranches, oldest-green-first (all green + sweep)
     "dic_a1_spark.operators.substr",
     "dic_a1_spark.operators.linededup",
     "dic_a1_spark.operators.semdedup",
@@ -131,7 +62,6 @@ _MODULES = (
     "dic_a1_spark.operators.embdecontam",
     "dic_a1_spark.operators.repselect",
     "dic_a1_spark.operators.postcompress",
-    # --- r10-fresh: fully re-graded last round, rotate to the very end
     "dic_a1_spark.operators.textstats",
     "dic_a1_spark.operators.sketches",
     "dic_a1_spark.operators.bpe",
@@ -147,59 +77,27 @@ def _load() -> tuple[dict[str, Callable[[SparkSession, str], DataFrame]], dict[s
     queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     oracles: dict[str, str] = {}
     origin: dict[str, str] = {}
-    declared_oracles: dict[str, set[str]] = {}  # modname -> oracle keys
-    declared_queries: dict[str, set[str]] = {}  # modname -> query names
-    for entry in _MODULES:
-        modname, only = (entry, None) if isinstance(entry, str) else entry
-        try:
-            mod = importlib.import_module(modname)
-        except ModuleNotFoundError:
-            continue  # module not built yet (incremental rounds)
+    for modname in _MODULES:
+        mod = importlib.import_module(modname)
         mod_queries = getattr(mod, "QUERIES", {})
         mod_oracles = getattr(mod, "ORACLES", {})
-        declared_oracles[modname] = set(mod_oracles)
-        declared_queries[modname] = set(mod_queries)
-        if only is not None:
-            missing = [n for n in only if n not in mod_queries]
-            if missing:
-                raise ValueError(f"{modname} has no queries {missing!r}")
-            names = list(only)
-        else:
-            # Bare entry: everything not already front-loaded by an
-            # earlier (module, names) selection of the SAME module.
-            names = [
-                n for n in mod_queries
-                if not (n in queries and origin[n] == modname)
-            ]
-        for name in names:
+        for name, fn in mod_queries.items():
             if name in queries:
                 raise ValueError(
                     f"duplicate query name {name!r} in {modname} "
                     f"(already registered by {origin[name]})"
                 )
-            queries[name] = mod_queries[name]
+            queries[name] = fn
             origin[name] = modname
-            if name in mod_oracles:
-                oracles[name] = mod_oracles[name]
-    # Completeness guard: a (module, names) selection MUST be completed by
-    # a later bare entry — otherwise the module's remaining queries would
-    # silently vanish from driver grading (no duplicate error fires).
-    for modname, declared in declared_queries.items():
-        dropped = [n for n in declared if n not in queries]
-        if dropped:
-            raise ValueError(
-                f"{modname}: queries never registered (selection without a "
-                f"completing bare entry?): {sorted(dropped)}"
-            )
-    # Orphan-oracle guard: every oracle key a module declares must name a
-    # registered query — a typo'd ORACLES key would otherwise silently
-    # degrade that query from value-hash-gated to rows-only.
-    for modname, keys in declared_oracles.items():
-        orphans = keys - set(queries)
+        # Orphan-oracle guard: every oracle key a module declares must name
+        # one of its queries — a typo'd ORACLES key would otherwise silently
+        # degrade that query from value-hash-gated to rows-only.
+        orphans = set(mod_oracles) - set(mod_queries)
         if orphans:
             raise ValueError(
                 f"{modname}: oracles without queries: {sorted(orphans)}"
             )
+        oracles.update(mod_oracles)
     return queries, oracles
 
 

@@ -128,9 +128,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def read_reviews_json(
-    spark: SparkSession, path: str, keep_corrupt: bool = False
-) -> DataFrame:
+def read_reviews_json(spark: SparkSession, path: str) -> DataFrame:
     """Read reviews-style line-delimited JSON with the reference's
     tolerance semantics: malformed lines are dropped, not failed.
 
@@ -146,17 +144,13 @@ def read_reviews_json(
     # (a bare count over valid rows) would trigger. As a from_json struct
     # field the corrupt marker is an ordinary column with no restrictions,
     # and the skip semantics are identical.
-    raw = spark.read.text(path)
-    parsed = raw.select(
+    parsed = spark.read.text(path).select(
         F.from_json(
             "value",
             REVIEW_SCHEMA,
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-        ).alias("r"),
-        F.col("value"),
+        ).alias("r")
     )
-    if keep_corrupt:
-        return parsed.select("r.*", "value")
     return (
         parsed.where(F.col("r").isNotNull() & F.col("r._corrupt_record").isNull())
         .select("r.*")

@@ -70,6 +70,48 @@ def test_reviews_pipeline_matches_reference_semantics(spark, fixture_paths, tmp_
     assert {r["category"]: r["cat_n"] for r in crow} == exp_cats
 
 
+def test_run_pipeline_writes_reference_files(spark, fixture_paths, tmp_path, monkeypatch):
+    """run_pipeline's two written files against the plain-Python reference:
+    every category line holds the reference's top-k words with chi2 within
+    1e-12 relative, the vocabulary line is exact, counters.txt holds the
+    reference's counts — and the whole job costs two collects."""
+    import ast
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from dic_a1_spark.operators.reviews import run_pipeline
+    from dic_a1_spark.sources.sinks import parse_counters_line
+
+    reviews_path, stopwords_path, lines = fixture_paths
+    expected, exp_total, exp_cats = reference_impl.pipeline(lines, set(STOP), k=75)
+
+    collects = []
+    real_collect = DataFrame.collect
+
+    def counting_collect(self):
+        collects.append(self)
+        return real_collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", counting_collect)
+    run_pipeline(spark, reviews_path, str(tmp_path), stopwords_path)
+    monkeypatch.undo()
+    assert len(collects) == 2
+
+    written = (tmp_path / "chisq_output.txt").read_text().splitlines()
+    *cat_lines, vocab_line = written
+    assert [ln.split("\t", 1)[0] for ln in cat_lines] == sorted(expected)
+    for ln in cat_lines:
+        cat, body = ln.split("\t", 1)
+        got = ast.literal_eval(body)
+        assert set(got) == set(expected[cat]), f"word set mismatch in {cat}"
+        for w, chi in expected[cat].items():
+            assert math.isclose(got[w], chi, rel_tol=1e-12), (cat, w)
+    assert vocab_line == str(sorted({w for top in expected.values() for w in top}))
+
+    total, per_cat = parse_counters_line((tmp_path / "counters.txt").read_text())
+    assert total == exp_total and per_cat == exp_cats
+
+
 def test_tokenizer_quirks(spark, fixture_paths):
     """`<`/`>` survive; digits/punct/apostrophes split; stopwords gone;
     defaults applied (SURVEY.md P1-P6 incl. the translate-set quirk)."""
